@@ -1,9 +1,11 @@
 """PCM16 WAV encode/decode and vectorized audio feature extraction.
 
 Pure numpy — no external audio libraries — so the whole decode +
-feature path runs inside Arrow-batched pandas UDFs with zero per-row
-Python (BASELINE.json input_hint: "vectorized pandas/Arrow UDFs, no
-per-row Python").
+feature path runs inside Arrow-batched UDFs with zero per-row Python
+(BASELINE.json input_hint: "vectorized pandas/Arrow UDFs, no per-row
+Python"). Every pass that reads the binary column goes through one
+decode driver, :func:`map_clips` (``features_df`` keeps its batch
+kernel but shares the driver's Arrow builder).
 
 The canonical container is a 44-byte RIFF/WAVE header followed by
 little-endian int16 mono samples. Non-PCM codecs (opus/mp3/aac/flac)
@@ -477,6 +479,83 @@ def decode_batch(bufs, codecs) -> list:
     return out
 
 
+def _arrow_schema(schema: str):
+    """DDL schema string -> the pyarrow schema Spark expects back."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    return to_arrow_schema(DataType.fromDDL(schema))
+
+
+def _arrow_array(values, typ):
+    """One typed Arrow column from an input column (passed through) or
+    a per-row sequence. NaN becomes NULL (``from_pandas``): the ``q_*``
+    aggregations skip NULLs but not NaNs. A list column is one flat
+    value buffer + offsets — converting per-row arrays element by
+    element made ``frame_sample`` about 5x slower."""
+    import pyarrow as pa
+
+    if isinstance(values, pa.Array):
+        return values.cast(typ)
+    if pa.types.is_list(typ):
+        dt = typ.value_type.to_pandas_dtype()
+        parts = [np.asarray(v, dtype=dt) for v in values]
+        flat = np.concatenate(parts) if parts else np.empty(0, dtype=dt)
+        offsets = np.cumsum([0] + [p.size for p in parts])
+        return pa.ListArray.from_arrays(
+            pa.array(offsets, type=pa.int32()),
+            pa.array(flat, type=typ.value_type, from_pandas=True))
+    return pa.array(values, type=typ, from_pandas=True)
+
+
+def _arrow_batch(schema, columns):
+    """Columns (one per ``schema`` field, in order) -> RecordBatch."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [_arrow_array(v, f.type) for f, v in zip(schema, columns)],
+        schema=schema)
+
+
+def map_clips(df, schema: str, per_clip, fail_row=None,
+              key_col: str = "clip_id", bytes_col: str = "bytes",
+              codec_col: str = "codec"):
+    """The one decode driver behind every audio binary-column pass.
+
+    Reads only (key, bytes, codec) and runs one ``mapInArrow`` pass:
+    each Arrow batch is decoded once (:func:`decode_batch`), then
+    ``per_clip(sr, pcm)`` returns a list of output rows for each
+    decodable clip — tuples of the schema's fields after the key.
+    Where decode fails or ``per_clip`` raises, the clip emits
+    ``fail_row`` (``None``: no row) — the decode-integrity check owns
+    reporting it. The key column is carried over from the input batch
+    and the rest is built as typed Arrow arrays from ``schema``."""
+    import pyarrow as pa
+
+    arrow_schema = _arrow_schema(schema)
+    fail = [] if fail_row is None else [fail_row]
+
+    def work(batches):
+        for rb in batches:
+            decoded = decode_batch(rb.column(bytes_col).to_pylist(),
+                                   rb.column(codec_col).to_pylist())
+            take, rows = [], []
+            for i, dec in enumerate(decoded):
+                out = fail
+                if dec is not None:
+                    try:
+                        out = per_clip(*dec)
+                    except Exception:
+                        pass
+                take += [i] * len(out)
+                rows += out
+            keys = rb.column(key_col).take(pa.array(take, type=pa.int32()))
+            cols = list(zip(*rows)) or [()] * (len(arrow_schema) - 1)
+            yield _arrow_batch(arrow_schema, [keys, *cols])
+
+    return df.select(key_col, bytes_col, codec_col).mapInArrow(work, schema=schema)
+
+
 FRAME = 512      # 32 ms @ 16 kHz
 HOP = 256
 
@@ -594,7 +673,7 @@ def extract_features(pcm: np.ndarray, sr_hz: int) -> np.ndarray:
 def features_for_batch(bufs, codecs, quality: bool = False,
                        byte_len: bool = False,
                        header: bool = False) -> np.ndarray:
-    """Vectorized-over-batch feature extraction for a pandas UDF body.
+    """Vectorized-over-batch feature extraction for an Arrow UDF body.
 
     Returns an (n, N_FEATURES) float32 matrix; ``quality=True``
     appends :func:`quality_metrics` + the payload byte length
@@ -652,16 +731,14 @@ def features_df(df, key_col: str = "clip_id", bytes_col: str = "bytes",
                 codec_col: str = "codec", carry_cols: tuple[str, ...] = (),
                 quality: bool = False, byte_len: bool = False,
                 header: bool = False):
-    """(key, f0..f11[, q_*]) feature DataFrame via mapInPandas — the
-    Arrow-batched decode + feature path (no per-row Python in the plan;
-    the numpy kernel runs per Arrow batch). Only (key, bytes, codec)
-    are read: Catalyst prunes every other column, so the huge binary
-    column is the only heavy input and it never shuffles.
-    ``quality=True`` appends the QUALITY_COLS from the same decode;
-    ``byte_len=True`` alone appends only q_byte_len (payload-size
-    check without the quality kernels)."""
-    import pandas as pd
-
+    """(key[, carry], f0..f11[, q_*]) feature DataFrame from one
+    Arrow-batched decode + feature pass (no per-row Python in the plan;
+    :func:`features_for_batch` runs per Arrow batch, its NaN cells
+    arrive as NULL). Only (key, carry, bytes, codec) are read: Catalyst
+    prunes every other column, so the huge binary column is the only
+    heavy input and it never shuffles. ``quality=True`` appends the
+    QUALITY_COLS from the same decode; ``byte_len=True`` alone appends
+    only q_byte_len (payload-size check without the quality kernels)."""
     feature_cols = [f"f{i}" for i in range(N_FEATURES)]
     if quality:
         feature_cols += list(QUALITY_COLS)
@@ -674,24 +751,24 @@ def features_df(df, key_col: str = "clip_id", bytes_col: str = "bytes",
     for c in carry_cols:
         head += f", {c} {carry_types[c]}"
     schema = head + ", " + ", ".join(f"{c} double" for c in feature_cols)
+    arrow_schema = _arrow_schema(schema)
 
     def extract(batches):
-        for pdf in batches:
+        for rb in batches:
             mat = features_for_batch(
-                pdf[bytes_col].tolist(), pdf[codec_col].tolist(),
+                rb.column(bytes_col).to_pylist(), rb.column(codec_col).to_pylist(),
                 quality=quality, byte_len=byte_len, header=header,
             )
-            out = pd.DataFrame(mat.astype(np.float64), columns=feature_cols)
-            for c in reversed(carry_cols):
-                out.insert(0, c, pdf[c].to_numpy())
-            out.insert(0, key_col, pdf[key_col].to_numpy())
-            yield out
+            yield _arrow_batch(
+                arrow_schema,
+                [rb.column(c) for c in (key_col, *carry_cols)]
+                + list(np.asfortranarray(mat, dtype=np.float64).T))
 
     # carry_cols may include codec (payload-codec gating) — dedupe so
     # the projection never carries the same column twice
     sel = [key_col, *carry_cols]
     sel += [c for c in (bytes_col, codec_col) if c not in sel]
-    return df.select(*sel).mapInPandas(extract, schema=schema)
+    return df.select(*sel).mapInArrow(extract, schema=schema)
 
 
 def snr_db(ref: np.ndarray, test: np.ndarray) -> float:
@@ -728,45 +805,22 @@ def resample_pcm(pcm: np.ndarray, sr_in: int, sr_out: int) -> np.ndarray:
 def resample_clips(df, target_sr: int, key_col: str = "clip_id",
                    bytes_col: str = "bytes", codec_col: str = "codec"):
     """Multimodal 'resize' operator: decode -> resample to target_sr ->
-    re-encode WAV, as ONE Arrow-batched mapInPandas pass (the bytes
-    column is read once and transformed in place; schema mirrors the
-    input contract). Undecodable clips pass through with null bytes —
-    the decode-integrity check owns reporting them.
+    re-encode WAV, as ONE Arrow-batched pass (the bytes column is read
+    once and transformed in place; schema mirrors the input contract).
+    Undecodable clips pass through with null bytes — the
+    decode-integrity check owns reporting them.
 
     Returns (key, bytes, sr_hz, dur_ms).
     """
-    import pandas as pd
+    def per_clip(sr, pcm):
+        out = resample_pcm(pcm, sr, target_sr)
+        # decode_clip yields floats in [-1, 1]; WAV wants int16
+        return [(wav_encode(np.round(out * 32768.0).clip(-32768, 32767), target_sr),
+                 target_sr, int(round(1000.0 * out.size / target_sr)))]
 
     schema = f"{key_col} string, {bytes_col} binary, sr_hz int, dur_ms int"
-
-    def work(batches):
-        for pdf in batches:
-            keys, bufs, srs, durs = [], [], [], []
-            decoded = decode_batch(pdf[bytes_col].tolist(),
-                                   pdf[codec_col].tolist())
-            for key, dec in zip(pdf[key_col], decoded):
-                keys.append(key)
-                try:
-                    if dec is None:
-                        raise ValueError("undecodable payload")
-                    sr, pcm = dec
-                    out = resample_pcm(pcm, sr, target_sr)
-                    # decode_clip yields floats in [-1, 1]; WAV wants int16
-                    bufs.append(
-                        wav_encode(np.round(out * 32768.0).clip(-32768, 32767),
-                                   target_sr)
-                    )
-                    srs.append(target_sr)
-                    durs.append(int(round(1000.0 * out.size / target_sr)))
-                except Exception:
-                    bufs.append(None)
-                    srs.append(None)
-                    durs.append(None)
-            yield pd.DataFrame(
-                {key_col: keys, bytes_col: bufs, "sr_hz": srs, "dur_ms": durs}
-            )
-
-    return df.select(key_col, bytes_col, codec_col).mapInPandas(work, schema=schema)
+    return map_clips(df, schema, per_clip, (None, None, None),
+                     key_col, bytes_col, codec_col)
 
 
 def frame_sample(df, n_frames: int = 4, frame_ms: int = 100,
@@ -780,55 +834,21 @@ def frame_sample(df, n_frames: int = 4, frame_ms: int = 100,
     Returns (key, frame_idx, start_ms, samples array<double>) — one row
     per extracted frame; undecodable clips contribute no rows (the
     decode-integrity check owns reporting them).
-
-    The samples column is built as ONE flat float64 buffer + offsets
-    per Arrow batch (pa.ListArray.from_arrays) instead of per-row
-    Python lists — the r06 guide-§4.2 re-slicing pattern; at 16k
-    clips x 4 x 100 ms frames the old ``.tolist()`` path materialized
-    ~100M Python floats and was 5x slower (5.1 s -> 0.9 s measured,
-    values bit-identical: the same ``astype(float64)`` slices feed
-    the buffer).
     """
-    import pyarrow as pa
+    def per_clip(sr, pcm):
+        w = max(1, int(sr * frame_ms / 1000))
+        if pcm.size < w:
+            return []
+        span = pcm.size - w
+        starts = [span * k // max(n_frames - 1, 1) for k in range(n_frames)]
+        return [(k, int(round(1000.0 * start / sr)),
+                 pcm[start:start + w].astype(np.float64))
+                for k, start in enumerate(starts)]
 
     schema = (
         f"{key_col} string, frame_idx int, start_ms int, samples array<double>"
     )
-
-    def work(batches):
-        for rb in batches:
-            tb = rb.to_pydict()
-            decoded = decode_batch(tb[bytes_col], tb[codec_col])
-            keys, idxs, starts, chunks, lens = [], [], [], [], []
-            for key, dec in zip(tb[key_col], decoded):
-                if dec is None:
-                    continue
-                sr, pcm = dec
-                w = max(1, int(sr * frame_ms / 1000))
-                if pcm.size < w:
-                    continue
-                span = pcm.size - w
-                for k in range(n_frames):
-                    start = span * k // max(n_frames - 1, 1)
-                    keys.append(key)
-                    idxs.append(k)
-                    starts.append(int(round(1000.0 * start / sr)))
-                    chunks.append(pcm[start:start + w].astype(np.float64))
-                    lens.append(w)
-            if chunks:
-                flat = pa.array(np.concatenate(chunks), type=pa.float64())
-                offsets = pa.array(
-                    np.concatenate([[0], np.cumsum(lens)]).astype(np.int32))
-                samples = pa.ListArray.from_arrays(offsets, flat)
-            else:
-                samples = pa.array([], type=pa.list_(pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(keys, type=pa.string()),
-                 pa.array(idxs, type=pa.int32()),
-                 pa.array(starts, type=pa.int32()), samples],
-                names=[key_col, "frame_idx", "start_ms", "samples"])
-
-    return df.select(key_col, bytes_col, codec_col).mapInArrow(work, schema=schema)
+    return map_clips(df, schema, per_clip, None, key_col, bytes_col, codec_col)
 
 
 def vad_spans(pcm: np.ndarray, sr: int, min_speech_ms: int = 100,
@@ -857,32 +877,19 @@ def vad_segments(df, key_col: str = "clip_id", bytes_col: str = "bytes",
                  sil_rms: float = SILENCE_RMS):
     """Energy-VAD segmentation: contiguous voiced spans from the same
     FRAME/HOP frame-RMS grid as the quality metrics, one Arrow-batched
-    mapInPandas pass (the standard silence-cutting step of a speech
+    pass (the standard silence-cutting step of a speech
     training-data pipeline). Segments shorter than ``min_speech_ms``
     are dropped; undecodable clips contribute no rows (the
     decode-integrity check owns reporting them).
 
     Returns (key, seg_idx, start_ms, end_ms) — one row per voiced span.
     """
-    import pandas as pd
+    def per_clip(sr, pcm):
+        return [(seg, *span) for seg, span
+                in enumerate(vad_spans(pcm, sr, min_speech_ms, sil_rms))]
 
     schema = f"{key_col} string, seg_idx int, start_ms int, end_ms int"
-
-    def work(batches):
-        for pdf in batches:
-            rows = []
-            decoded = decode_batch(pdf[bytes_col].tolist(),
-                                   pdf[codec_col].tolist())
-            for key, dec in zip(pdf[key_col], decoded):
-                if dec is None:
-                    continue
-                sr, pcm = dec
-                for seg, (start_ms, end_ms) in enumerate(
-                        vad_spans(pcm, sr, min_speech_ms, sil_rms)):
-                    rows.append((key, seg, start_ms, end_ms))
-            yield pd.DataFrame(rows, columns=[key_col, "seg_idx", "start_ms", "end_ms"])
-
-    return df.select(key_col, bytes_col, codec_col).mapInPandas(work, schema=schema)
+    return map_clips(df, schema, per_clip, None, key_col, bytes_col, codec_col)
 
 
 def normalize_loudness(df, target_dbfs: float = -20.0, key_col: str = "clip_id",
@@ -895,40 +902,21 @@ def normalize_loudness(df, target_dbfs: float = -20.0, key_col: str = "clip_id",
 
     Returns (key, bytes, sr_hz, gain_db).
     """
-    import pandas as pd
-
-    schema = f"{key_col} string, {bytes_col} binary, sr_hz int, gain_db double"
     target_rms = 10.0 ** (target_dbfs / 20.0)
 
-    def work(batches):
-        for pdf in batches:
-            keys, bufs, srs, gains = [], [], [], []
-            decoded = decode_batch(pdf[bytes_col].tolist(),
-                                   pdf[codec_col].tolist())
-            for key, dec in zip(pdf[key_col], decoded):
-                keys.append(key)
-                try:
-                    if dec is None:
-                        raise ValueError("undecodable payload")
-                    sr, pcm = dec
-                    x = np.asarray(pcm, dtype=np.float64)
-                    rms = float(np.sqrt(np.mean(x * x))) if x.size else 0.0
-                    if rms == 0.0:
-                        raise ValueError("silent clip")
-                    g = target_rms / rms
-                    out = np.clip(x * g, -1.0, 1.0)
-                    bufs.append(wav_encode(
-                        np.round(out * 32768.0).clip(-32768, 32767), sr))
-                    srs.append(sr)
-                    gains.append(20.0 * np.log10(g))
-                except Exception:
-                    bufs.append(None)
-                    srs.append(None)
-                    gains.append(None)
-            yield pd.DataFrame({key_col: keys, bytes_col: bufs,
-                                "sr_hz": srs, "gain_db": gains})
+    def per_clip(sr, pcm):
+        x = np.asarray(pcm, dtype=np.float64)
+        rms = float(np.sqrt(np.mean(x * x))) if x.size else 0.0
+        if rms == 0.0:
+            raise ValueError("silent clip")
+        g = target_rms / rms
+        out = np.clip(x * g, -1.0, 1.0)
+        return [(wav_encode(np.round(out * 32768.0).clip(-32768, 32767), sr),
+                 sr, 20.0 * np.log10(g))]
 
-    return df.select(key_col, bytes_col, codec_col).mapInPandas(work, schema=schema)
+    schema = f"{key_col} string, {bytes_col} binary, sr_hz int, gain_db double"
+    return map_clips(df, schema, per_clip, (None, None, None),
+                     key_col, bytes_col, codec_col)
 
 
 # --------------------------------------------------------------------------

@@ -25,16 +25,16 @@ scope per the training-data-pipeline mandate).
 
 from __future__ import annotations
 
+from collections import defaultdict
+
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from menelaus_spark.audio import (
-    decode_batch,
     fingerprint_codes,
-    fingerprint_shingles,
     fp_sample_count,
+    map_clips,
     pack_shingles,
 )
 from menelaus_spark.operators.dedup import (
@@ -65,6 +65,32 @@ def shingle_hex(shingles: np.ndarray) -> list[str]:
     return [f"{v:016x}" for v in np.asarray(shingles, dtype=np.int64).view(np.uint64)]
 
 
+_SHINGLE_FIELDS = "shingles array<string>, heads array<string>, sig array<long>"
+_CODE_FIELDS = ("codes array<int>, masks array<int>, peaks array<double>, "
+               "n_fp int")
+# what an undecodable or failing clip emits: it can never pair
+_NO_SHINGLES = ([], [], [])
+_NO_CODES = ([], [], [], 0)
+
+
+def _shingle_fields(codes: np.ndarray) -> tuple:
+    """(shingles, heads, sig) of one clip's uint32 frame codes: the
+    sorted shingle set, its first FP_HEADS time-order shingles, and the
+    decode-pass MinHash signature (minhash_sig_py, the exact md5 twin
+    of the frame kernel)."""
+    packed = pack_shingles(codes)
+    sh = shingle_hex(np.unique(packed))
+    return sh, shingle_hex(packed[:FP_HEADS]), minhash_sig_py(sh, FP_MINHASH_K)
+
+
+def _code_fields(codes, masks, peaks, n_samples: int, sr: int) -> tuple:
+    """(codes, masks, peaks, n_fp) of one clip: the uint32 words as
+    int32 lanes, and the canonical-rate sample count (the speed-factor
+    basis)."""
+    return (codes.astype(np.int32), masks.astype(np.int32), peaks,
+            fp_sample_count(n_samples, sr))
+
+
 def audio_shingles(
     df: DataFrame,
     key_col: str = "clip_id",
@@ -72,36 +98,15 @@ def audio_shingles(
     codec_col: str = "codec",
 ) -> DataFrame:
     """(key, shingles array<string>, heads, sig) in one Arrow-batched
-    pass — the MinHash signature rides the decode (minhash_sig_py, the
-    exact md5 twin of the frame kernel), so downstream LSH starts from
-    a per-row column with zero extra shuffle. Undecodable or too-short
-    clips yield an empty set — they can never pair, and the
-    decode-integrity check owns reporting them."""
-    schema = (f"{key_col} string, shingles array<string>, "
-              f"heads array<string>, sig array<long>")
+    pass — the MinHash signature rides the decode, so downstream LSH
+    starts from a per-row column with zero extra shuffle. Undecodable
+    or too-short clips yield an empty set — they can never pair, and
+    the decode-integrity check owns reporting them."""
+    def per_clip(sr, pcm):
+        return [_shingle_fields(fingerprint_codes(pcm, sr)[0])]
 
-    def work(batches):
-        for pdf in batches:
-            keys, shl, hds, sg = [], [], [], []
-            decoded = decode_batch(pdf[bytes_col].tolist(),
-                                   pdf[codec_col].tolist())
-            for key, dec in zip(pdf[key_col], decoded):
-                keys.append(key)
-                try:
-                    if dec is None:
-                        raise ValueError("undecodable payload")
-                    sr, pcm = dec
-                    packed = pack_shingles(fingerprint_codes(pcm, sr)[0])
-                    sh = shingle_hex(np.unique(packed))
-                    shl.append(sh)
-                    hds.append(shingle_hex(packed[:FP_HEADS]))
-                    sg.append(minhash_sig_py(sh, FP_MINHASH_K))
-                except Exception:
-                    shl.append([]); hds.append([]); sg.append([])
-            yield pd.DataFrame({key_col: keys, "shingles": shl, "heads": hds,
-                                "sig": sg})
-
-    return df.select(key_col, bytes_col, codec_col).mapInPandas(work, schema=schema)
+    return map_clips(df, f"{key_col} string, {_SHINGLE_FIELDS}", per_clip,
+                     _NO_SHINGLES, key_col, bytes_col, codec_col)
 
 
 def audio_fingerprints(
@@ -111,46 +116,18 @@ def audio_fingerprints(
     codec_col: str = "codec",
 ) -> DataFrame:
     """Everything every matching path needs from ONE Arrow decode
-    pass: (key, shingles/heads array<string>, codes/masks array<int>,
-    peaks array<double>, n_fp int). When a corpus runs several
-    near-dup paths — the production configuration — persist this frame
-    and pass it to each; the binary column is then read exactly once
-    for the whole dedup suite."""
-    schema = (f"{key_col} string, shingles array<string>, heads array<string>, "
-              f"sig array<long>, "
-              f"codes array<int>, masks array<int>, peaks array<double>, "
-              f"n_fp int")
+    pass: (key, shingles/heads array<string>, sig array<long>,
+    codes/masks array<int>, peaks array<double>, n_fp int). When a
+    corpus runs several near-dup paths — the production configuration
+    — persist this frame and pass it to each; the binary column is
+    then read exactly once for the whole dedup suite."""
+    def per_clip(sr, pcm):
+        c, m, p = fingerprint_codes(pcm, sr)
+        return [_shingle_fields(c) + _code_fields(c, m, p, pcm.size, sr)]
 
-    def work(batches):
-        for pdf in batches:
-            keys, shl, hds, sg, cs, ms, ps, nf = [], [], [], [], [], [], [], []
-            decoded = decode_batch(pdf[bytes_col].tolist(),
-                                   pdf[codec_col].tolist())
-            for key, dec in zip(pdf[key_col], decoded):
-                keys.append(key)
-                try:
-                    if dec is None:
-                        raise ValueError("undecodable payload")
-                    sr, pcm = dec
-                    c, m, p = fingerprint_codes(pcm, sr)
-                    packed = pack_shingles(c)
-                    sh = shingle_hex(np.unique(packed))
-                    shl.append(sh)
-                    hds.append(shingle_hex(packed[:FP_HEADS]))
-                    sg.append(minhash_sig_py(sh, FP_MINHASH_K))
-                    cs.append(c.astype(np.int32))
-                    ms.append(m.astype(np.int32))
-                    ps.append(p)
-                    nf.append(fp_sample_count(pcm.size, sr))
-                except Exception:
-                    shl.append([]); hds.append([]); sg.append([])
-                    cs.append([]); ms.append([]); ps.append([]); nf.append(0)
-            yield pd.DataFrame({key_col: keys, "shingles": shl, "heads": hds,
-                                "sig": sg,
-                                "codes": cs, "masks": ms, "peaks": ps,
-                                "n_fp": nf})
-
-    return df.select(key_col, bytes_col, codec_col).mapInPandas(work, schema=schema)
+    return map_clips(df, f"{key_col} string, {_SHINGLE_FIELDS}, {_CODE_FIELDS}",
+                     per_clip, _NO_SHINGLES + _NO_CODES,
+                     key_col, bytes_col, codec_col)
 
 
 # at most one internally-pinned shingle frame across repeated fp=None
@@ -215,38 +192,32 @@ def audio_neardup_pairs(
         # bounded-driver fast path (the count doubles as the pin's /
         # caller-persisted frame's materializing action — one decode
         # either way): banding, bucket self-joins and the distinct all
-        # run on the collected (id, sig[, heads]) rows; the resulting
+        # run on the collected (id, sig, heads) rows; the resulting
         # LocalRelation broadcasts into the verify joins below, so the
         # shingle frame is never shuffled. Above the cap (e.g. the
         # 800k-clip scaling witness) the distributed plans run
         # unchanged.
-        cols = [key_col, "sig"]
-        if containment_threshold is not None:
-            cols.append("heads")
-        pdf = sh.select(*cols).toPandas()  # Arrow collect off the pin
+        pdf = sh.select(key_col, "sig", "heads").toPandas()  # Arrow collect off the pin
         pairs = lsh_candidate_pairs_driver(
             list(zip(pdf[key_col], pdf["sig"])), bands, rows)
-        if containment_threshold is not None:
-            # twin of the head-bucket union: explode(slice(heads, 1,
-            # prefix_keys)) keeps per-row duplicates, the bucket count
-            # counts ROWS, and same-id pairs fall to id_a < id_b
-            from collections import defaultdict
-
-            buckets: dict = defaultdict(list)
-            for rid, heads in zip(pdf[key_col], pdf["heads"]):
-                if heads is None:
-                    continue
-                for hshingle in heads[:prefix_keys]:
-                    buckets[hshingle].append(rid)
-            for g in buckets.values():
-                if len(g) < 2 or len(g) > prefix_cap:
-                    continue
-                for x in range(len(g)):
-                    for y in range(x + 1, len(g)):
-                        a, b2 = g[x], g[y]
-                        if a == b2:
-                            continue
-                        pairs.add((a, b2) if a < b2 else (b2, a))
+        # twin of the head-bucket union: explode(slice(heads, 1,
+        # prefix_keys)) keeps per-row duplicates, the bucket count
+        # counts ROWS, and same-id pairs fall to id_a < id_b
+        buckets: dict = defaultdict(list)
+        for rid, heads in zip(pdf[key_col], pdf["heads"]):
+            if heads is None:
+                continue
+            for hshingle in heads[:prefix_keys]:
+                buckets[hshingle].append(rid)
+        for g in buckets.values():
+            if len(g) < 2 or len(g) > prefix_cap:
+                continue
+            for x in range(len(g)):
+                for y in range(x + 1, len(g)):
+                    a, b2 = g[x], g[y]
+                    if a == b2:
+                        continue
+                    pairs.add((a, b2) if a < b2 else (b2, a))
         cands = local_pairs_frame(df.sparkSession, pairs,
                                   dict(sh.dtypes)[key_col])
     if cands is None:
@@ -314,31 +285,11 @@ def audio_fingerprint_codes(
     audio.fingerprint_codes, plus the canonical-rate sample count
     (the speed-factor basis). Undecodable clips yield empty arrays
     and n_fp 0."""
-    schema = (f"{key_col} string, codes array<int>, masks array<int>, "
-              f"peaks array<double>, n_fp int")
+    def per_clip(sr, pcm):
+        return [_code_fields(*fingerprint_codes(pcm, sr), pcm.size, sr)]
 
-    def work(batches):
-        for pdf in batches:
-            keys, cs, ms, ps, nf = [], [], [], [], []
-            decoded = decode_batch(pdf[bytes_col].tolist(),
-                                   pdf[codec_col].tolist())
-            for key, dec in zip(pdf[key_col], decoded):
-                keys.append(key)
-                try:
-                    if dec is None:
-                        raise ValueError("undecodable payload")
-                    sr, pcm = dec
-                    c, m, p = fingerprint_codes(pcm, sr)
-                    cs.append(c.astype(np.int32))
-                    ms.append(m.astype(np.int32))
-                    ps.append(p)
-                    nf.append(fp_sample_count(pcm.size, sr))
-                except Exception:
-                    cs.append([]); ms.append([]); ps.append([]); nf.append(0)
-            yield pd.DataFrame({key_col: keys, "codes": cs, "masks": ms,
-                                "peaks": ps, "n_fp": nf})
-
-    return df.select(key_col, bytes_col, codec_col).mapInPandas(work, schema=schema)
+    return map_clips(df, f"{key_col} string, {_CODE_FIELDS}", per_clip,
+                     _NO_CODES, key_col, bytes_col, codec_col)
 
 
 def transcript_candidate_pairs(
@@ -354,8 +305,9 @@ def transcript_candidate_pairs(
     shared by thousands of clips is the text-dedup path's job), so
     candidate volume is bounded by cap x blocks.
 
-    At or below ``driver_cap`` block rows (LIMIT-probed — the probe
-    reads only the pruned transcript column, never the payload) the
+    At or below ``driver_cap`` block rows (gated on ``blocks.count()``
+    — the count reads only the pruned transcript column, never the
+    payload) the
     grouping and pair generation run driver-side on the collected
     JVM-computed (id, md5 block) rows, and the resulting LocalRelation
     broadcasts into the verify joins so the fingerprint frame is never

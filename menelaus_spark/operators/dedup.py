@@ -560,19 +560,26 @@ def capped_block_pairs_driver(rows_, cap: int | None) -> set:
     return pairs
 
 
+def _local_frame(spark, rows, names: list[str], schema: str):
+    """LocalRelation of driver-built ``rows`` (tuples in ``names``
+    order), sent as one pyarrow table: an EMPTY pandas frame would take
+    pyspark's non-Arrow path and come back as an RDD, so ``isLocal()``
+    — the verify joins' broadcast switch — would turn false exactly
+    when there is nothing to join."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) or [()] * len(names)
+    return spark.createDataFrame(
+        pa.table([pa.array(c) for c in cols], names=names), schema)
+
+
 def local_pairs_frame(spark, pairs, id_type: str):
     """(id_a, id_b) LocalRelation from a driver pair set — sorted for
     deterministic physical row order; its small known size lets the
     planner broadcast it into the verify joins, so the fingerprint
     frame is never shuffled."""
-    import pandas as pd
-
-    schema = f"id_a {id_type}, id_b {id_type}"
-    if not pairs:
-        return spark.createDataFrame([], schema)
-    data = sorted(pairs)
-    return spark.createDataFrame(  # pandas input -> Arrow path
-        pd.DataFrame(data, columns=["id_a", "id_b"]), schema)
+    return _local_frame(spark, sorted(pairs), ["id_a", "id_b"],
+                        f"id_a {id_type}, id_b {id_type}")
 
 
 def minhash_lsh_dedup(
@@ -693,11 +700,8 @@ def repeated_ngram_pairs(
         id_type = dict(df.dtypes)[id_col]
         schema = f"id_a {id_type}, id_b {id_type}, shared_spans long"
         data = sorted((a, b, c) for (a, b), c in counts.items())
-        if not data:
-            return df.sparkSession.createDataFrame([], schema)
-        return df.sparkSession.createDataFrame(
-            pd.DataFrame(data, columns=["id_a", "id_b", "shared_spans"]),
-            schema)
+        return _local_frame(df.sparkSession, data,
+                            ["id_a", "id_b", "shared_spans"], schema)
     dfreq = spans.groupBy("__h").agg(F.count(F.lit(1)).alias("__df"))
     cold = spans.join(dfreq.filter(F.col("__df") <= hot_cap), on="__h")
     a = cold.select(F.col(id_col).alias("id_a"), "__h")

@@ -85,43 +85,22 @@ def fingerprint_banded_stream(
     bands: int = 8,
     rows: int = 2,
 ) -> DataFrame:
-    """Streaming-safe fingerprint stage: ONE mapInPandas pass decodes,
+    """Streaming-safe fingerprint stage: ONE Arrow-batched pass decodes,
     shingles, signs and bands each clip (no groupBy — a streaming
     aggregation would force its own state store). Emits ``bands`` rows
     per decodable clip: (key, band, bhash, shingles)."""
-    from menelaus_spark.audio import decode_batch, fingerprint_shingles
+    from menelaus_spark.audio import fingerprint_shingles, map_clips
     from menelaus_spark.operators.audio_dedup import shingle_hex
 
+    def per_clip(sr, pcm):
+        sh = shingle_hex(fingerprint_shingles(pcm, sr))
+        if not sh:
+            return []
+        sig = minhash_signature(sh, k)
+        return [(b, bh, sh) for b, bh in enumerate(band_hashes(sig, bands, rows))]
+
     schema = f"{key_col} string, band int, bhash string, shingles array<string>"
-
-    def work(batches):
-        for pdf in batches:
-            keys, bnds, hashes, shs = [], [], [], []
-            decoded = decode_batch(pdf[bytes_col].tolist(),
-                                   pdf[codec_col].tolist())
-            for key, dec in zip(pdf[key_col], decoded):
-                try:
-                    if dec is None:
-                        raise ValueError("undecodable payload")
-                    sr, pcm = dec
-                    sh = shingle_hex(fingerprint_shingles(pcm, sr))
-                except Exception:
-                    sh = []
-                if not sh:
-                    continue
-                sig = minhash_signature(sh, k)
-                for b, bh in enumerate(band_hashes(sig, bands, rows)):
-                    keys.append(key)
-                    bnds.append(b)
-                    hashes.append(bh)
-                    shs.append(sh)
-            yield pd.DataFrame(
-                {key_col: keys, "band": bnds, "bhash": hashes, "shingles": shs}
-            )
-
-    return stream_df.select(key_col, bytes_col, codec_col).mapInPandas(
-        work, schema=schema
-    )
+    return map_clips(stream_df, schema, per_clip, None, key_col, bytes_col, codec_col)
 
 
 def stateful_neardup_stream(

@@ -498,3 +498,64 @@ def test_processing_ops_fault_fanout(spark):
     assert pcm_silent and all(ln[c]["gain_db"] is None for c in pcm_silent)
     assert all(ln[c]["gain_db"] is not None
                for c in fs_ids - silent_ids)
+    # features at the Arrow boundary: the corrupt clip's NaN cells
+    # arrive as NULL (the q_* aggregations are not NaN-robust) while
+    # its payload length stays known
+    ft = {r["clip_id"]: r for r in audio.features_df(df, quality=True).collect()}
+    bad = ft["clip_corrupt0"]
+    assert bad["f0"] is None
+    assert all(bad[c] is None for c in audio.QUALITY_COLS[:-1])
+    assert bad["q_byte_len"] == len(b"NOTARIFF")
+    assert all(ft[c]["f0"] is not None for c in fs_ids)
+
+
+
+def test_map_clips_fault_rows(spark):
+    # the decode driver's fault path: undecodable clips and clips whose
+    # per-clip function raises emit fail_row (or no row); a batch with
+    # no decodable clip still yields a typed, empty result
+    good = audio.wav_encode(np.zeros(800), 8000)
+    df = spark.createDataFrame(
+        pd.DataFrame({"clip_id": ["a", "b", "c"], "bytes": [good, b"junk", None],
+                      "codec": ["pcm"] * 3}))
+    schema = "clip_id string, sr int, n double"
+
+    def two_rows(sr, pcm):
+        return [(sr, float(pcm.size)), (sr, float("nan"))]
+
+    def boom(sr, pcm):
+        raise ValueError("per-clip failure")
+
+    got = audio.map_clips(df, schema, two_rows, (None, -1.0)).collect()
+    assert [tuple(r) for r in got] == [
+        ("a", 8000, 800.0), ("a", 8000, None),  # NaN arrives as NULL
+        ("b", None, -1.0), ("c", None, -1.0)]
+    assert audio.map_clips(df, schema, boom).count() == 0
+    bad_only = audio.map_clips(df.filter("clip_id != 'a'"), schema, two_rows)
+    assert bad_only.collect() == [] and bad_only.schema.simpleString() == \
+        "struct<clip_id:string,sr:int,n:double>"
+
+
+def test_one_decode_driver():
+    # every audio binary-column pass goes through map_clips: inside the
+    # package only the driver and the features batch kernel call
+    # decode_batch, and the ported modules hold no pandas-boundary pass
+    import ast
+    import pathlib
+
+    import menelaus_spark
+
+    root = pathlib.Path(menelaus_spark.__file__).parent
+    callers = set()
+    for path in sorted(root.rglob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            for node in ast.walk(top):
+                if isinstance(node, ast.Call) and "decode_batch" in (
+                        getattr(node.func, "id", None),
+                        getattr(node.func, "attr", None)):
+                    callers.add((path.relative_to(root).as_posix(),
+                                 getattr(top, "name", None)))
+    assert callers == {("audio.py", "map_clips"),
+                       ("audio.py", "features_for_batch")}
+    for mod in ("audio.py", "operators/audio_dedup.py", "streaming/dedup.py"):
+        assert "mapInPandas" not in (root / mod).read_text(), mod

@@ -139,6 +139,19 @@ def test_audio_shingles_undecodable_rows_empty(spark):
     for cid, sh in out2.items():
         if cid.endswith("1"):
             assert sh == []
+    # the code pass: empty arrays and n_fp 0 for an undecodable clip,
+    # and exactly audio_fingerprints' code columns for the rest
+    from menelaus_spark.operators.audio_dedup import (audio_fingerprint_codes,
+                                                      audio_fingerprints)
+
+    cols = ["codes", "masks", "peaks", "n_fp"]
+    codes = {r[0]: tuple(r[1:]) for r in audio_fingerprint_codes(df2).collect()}
+    full = {r[0]: tuple(r[1:]) for r in
+            audio_fingerprints(df2).select("clip_id", *cols).collect()}
+    assert codes == full and len(codes) == 24
+    bad = [v for cid, v in codes.items() if cid.endswith("1")]
+    assert bad and all(v == ([], [], [], 0) for v in bad)
+    assert all(v[3] > 0 and v[0] for cid, v in codes.items() if not cid.endswith("1"))
 
 
 def test_shared_fingerprint_frame_equivalence(spark):

@@ -382,6 +382,37 @@ def test_ivf_degenerate_sample_fewer_centroids_than_lists(spark):
     assert (out["cosine"] > 0.999).all()
 
 
+def test_ivf_nonfinite_centroid_literal_parses(spark):
+    # an infinite component normalizes to a NaN training row, so one
+    # centroid is NaN; its inlined array literal must parse and the NaN
+    # propagate into the scores, not fail the query at analysis
+    rows = [(i, [1.0 * (i % 3 == 0), 1.0 * (i % 3 == 1), 1.0 * (i % 3 == 2)])
+            for i in range(9)] + [(9, [float("inf"), 0.0, 1.0])]
+    df = spark.createDataFrame(rows, schema="vec_id long, embedding array<double>")
+    with np.errstate(invalid="ignore"):
+        out = similarity.ivf_ann_topk(
+            df, "vec_id", "embedding", [("q0", [1.0, 0.0, 0.0])], k=3,
+            n_lists=4, nprobe=4,
+        ).toPandas()
+    assert len(out) == 3 and out["cosine"].isna().any()
+    lit = similarity._dbl_array_sql([0.5, float("nan"), float("inf"), -float("inf")])
+    v = spark.range(1).select(F.expr(lit).alias("v")).first()["v"]
+    assert v[0] == 0.5 and np.isnan(v[1]) and v[2] == np.inf and v[3] == -np.inf
+
+
+def test_driver_pair_frames_stay_local_when_empty(spark):
+    # driver-built pair sets broadcast into the verify joins only while
+    # isLocal() holds — an empty set must not turn into an RDD plan
+    assert dedup.local_pairs_frame(spark, set(), "string").isLocal()
+    assert dedup.local_pairs_frame(spark, {("a", "b")}, "string").isLocal()
+    df = spark.createDataFrame([(1, "no shared spans in this one document at all")],
+                               "doc_id long, text string")
+    none = dedup.repeated_ngram_pairs(df, "doc_id", n=8)
+    assert none.isLocal() and none.count() == 0
+    assert none.dtypes == [("id_a", "bigint"), ("id_b", "bigint"),
+                           ("shared_spans", "bigint")]
+
+
 def test_pq_train_shapes_and_determinism(spark, emb):
     cb1 = similarity.pq_train(emb, "vec_id", "embedding", m=8, n_codes=16)
     cb2 = similarity.pq_train(emb.repartition(5), "vec_id", "embedding",
