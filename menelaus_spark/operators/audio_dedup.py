@@ -25,8 +25,6 @@ scope per the training-data-pipeline mandate).
 
 from __future__ import annotations
 
-from collections import defaultdict
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,13 +37,15 @@ from menelaus_spark.audio import (
 )
 from menelaus_spark.operators.dedup import (
     OwnedCache,
-    jaccard_col,
+    capped_block_pairs_driver,
     local_pairs_frame,
     lsh_candidate_pairs,
     lsh_candidate_pairs_driver,
     minhash_from_shingles,
     minhash_sig_py,
+    normalized_text,
 )
+from menelaus_spark.operators.similarity import _dbl_sql
 
 
 FP_HEADS = 4  # time-order head shingles emitted for prefix-trim buckets
@@ -89,6 +89,23 @@ def _code_fields(codes, masks, peaks, n_samples: int, sr: int) -> tuple:
     basis)."""
     return (codes.astype(np.int32), masks.astype(np.int32), peaks,
             fp_sample_count(n_samples, sr))
+
+
+def _pair_join(pairs: DataFrame, fp: DataFrame, key_col: str, **cols) -> DataFrame:
+    """``pairs`` (id_a, id_b) joined to both clips' ``fp`` columns: each
+    ``x="col"`` arrives as ``xa`` and ``xb``. A driver-generated
+    (LocalRelation) pair set is bounded by construction, so the pair +
+    side-a intermediate broadcasts and ``fp`` is never shuffled; a
+    distributed pair frame keeps the shuffle join (its size scales with
+    the corpus)."""
+    key = "`" + key_col.replace("`", "``") + "`"
+    a, b = (fp.selectExpr(f"{key} AS id_{s}",
+                          *(f"{c} AS {x}{s}" for x, c in cols.items()))
+            for s in "ab")
+    paired = pairs.join(a, on="id_a")
+    if pairs.isLocal():
+        paired = F.broadcast(paired)
+    return paired.join(b, on="id_b")
 
 
 def audio_shingles(
@@ -203,21 +220,9 @@ def audio_neardup_pairs(
         # twin of the head-bucket union: explode(slice(heads, 1,
         # prefix_keys)) keeps per-row duplicates, the bucket count
         # counts ROWS, and same-id pairs fall to id_a < id_b
-        buckets: dict = defaultdict(list)
-        for rid, heads in zip(pdf[key_col], pdf["heads"]):
-            if heads is None:
-                continue
-            for hshingle in heads[:prefix_keys]:
-                buckets[hshingle].append(rid)
-        for g in buckets.values():
-            if len(g) < 2 or len(g) > prefix_cap:
-                continue
-            for x in range(len(g)):
-                for y in range(x + 1, len(g)):
-                    a, b2 = g[x], g[y]
-                    if a == b2:
-                        continue
-                    pairs.add((a, b2) if a < b2 else (b2, a))
+        pairs |= capped_block_pairs_driver(
+            ((rid, h) for rid, heads in zip(pdf[key_col], pdf["heads"])
+             if heads is not None for h in heads[:prefix_keys]), prefix_cap)
         cands = local_pairs_frame(df.sparkSession, pairs,
                                   dict(sh.dtypes)[key_col])
     if cands is None:
@@ -243,34 +248,16 @@ def audio_neardup_pairs(
                 .select("id_a", "id_b")
             )
             cands = cands.unionByName(pcands).distinct()
-    keep = F.col("jaccard") >= threshold
+    keep = f"jaccard >= {_dbl_sql(threshold)}"
     if containment_threshold is not None:
-        keep = keep | (F.col("containment") >= containment_threshold)
-    paired = cands.join(
-        sh.select(F.col(key_col).alias("id_a"), F.col("shingles").alias("sh_a")),
-        on="id_a",
-    )
-    if cands.isLocal():
-        # bounded driver-generated candidates: broadcast the pair +
-        # sh_a intermediate so the shingle frame is never shuffled
-        paired = F.broadcast(paired)
-    return (
-        paired.join(
-            sh.select(F.col(key_col).alias("id_b"), F.col("shingles").alias("sh_b")),
-            on="id_b",
-        )
-        .withColumn("jaccard", F.round(jaccard_col(F.col("sh_a"), F.col("sh_b")), 6))
-        .withColumn(
-            "containment",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.greatest(F.least(F.size("sh_a"), F.size("sh_b")), F.lit(1)),
-                6,
-            ),
-        )
-        .filter(keep)
-        .select("id_a", "id_b", "jaccard", "containment")
-    )
+        keep += f" OR containment >= {_dbl_sql(containment_threshold)}"
+    inter = "size(array_intersect(sha, shb))"
+    union = "size(array_distinct(concat(sha, shb)))"  # dedup.jaccard_col
+    return _pair_join(cands, sh, key_col, sh="shingles").selectExpr(
+        "id_a", "id_b",
+        f"round(IF({union} = 0, 0.0D, {inter} / {union}), 6) AS jaccard",
+        f"round({inter} / greatest(least(size(sha), size(shb)), 1), 6) AS containment",
+    ).where(keep)
 
 
 def audio_fingerprint_codes(
@@ -313,10 +300,6 @@ def transcript_candidate_pairs(
     broadcasts into the verify joins so the fingerprint frame is never
     shuffled; above the cap the block self-join plan is unchanged.
     The cap sits below the audio scaling-witness size (800k clips)."""
-    from menelaus_spark.operators.dedup import (capped_block_pairs_driver,
-                                                local_pairs_frame,
-                                                normalized_text)
-
     blocks = (
         df.filter(F.col(transcript_col).isNotNull())
         # empty/whitespace transcripts carry no blocking evidence and
@@ -378,8 +361,9 @@ def transcript_blocked_neardup(
     md5(normalized transcript) with singleton and hot-block pruning
     (blocks past ``block_cap`` are skipped — a transcript shared by
     thousands of clips is the text-dedup path's job), so candidate
-    volume is bounded by cap x blocks; all verify arithmetic is
-    JVM-side zip_with/bit_count over the candidate pairs only.
+    volume is bounded by cap x blocks; the verify is two parsed SQL
+    projections (zip_with/aggregate/bit_count over the candidate pairs'
+    code arrays, JVM-side) with no Python in the plan.
 
     Duplicate criterion (equal frame counts, then all three must hold):
     - masked wBER <= wber_max: margin-cleared bits agree (the lossy-
@@ -392,63 +376,40 @@ def transcript_blocked_neardup(
 
     Returns (id_a, id_b, wber, raw_ber, peak_agree, n_overlap).
     """
-    def bc32(v):
-        # our uint32 words live in signed int columns; bit_count would
-        # sign-extend negatives to 64 bits and count 32 phantom ones
-        return F.bit_count(v.cast("long").bitwiseAND(F.lit(0xFFFFFFFF)))
-
     if fp is None:
         fp = audio_fingerprint_codes(df, key_col, bytes_col, codec_col)
     if pairs is None:
         pairs = transcript_candidate_pairs(df, key_col, transcript_col, block_cap)
-    a = fp.select(F.col(key_col).alias("id_a"), F.col("codes").alias("ca"),
-                  F.col("masks").alias("ma"), F.col("peaks").alias("pa"))
-    b = fp.select(F.col(key_col).alias("id_b"), F.col("codes").alias("cb"),
-                  F.col("masks").alias("mb"), F.col("peaks").alias("pb"))
-    n = F.least(F.size("ca"), F.size("cb"))
-    # a driver-generated (LocalRelation) pair set is bounded by
-    # construction, so the pair+codes intermediate can broadcast and
-    # the fingerprint frame is never shuffled; distributed pair frames
-    # keep the shuffle join (their size scales with the corpus)
-    paired = pairs.join(a, on="id_a")
-    if pairs.isLocal():
-        paired = F.broadcast(paired)
-    joined = (
-        paired.join(b, on="id_b")
+    # set bits summed over a word array: our uint32 words live in
+    # signed int columns, and bit_count would sign-extend negatives to
+    # 64 bits and count 32 phantom ones, hence the 32-bit mask
+    bits = "aggregate({}, 0, (s, v) -> s + bit_count(CAST(v AS BIGINT) & 4294967295))"
+    words = (
+        _pair_join(pairs, fp, key_col, c="codes", m="masks", p="peaks")
         # full-duplicate classes preserve duration exactly: equal frame
         # counts is the cheapest distinct-recording rejector (trimmed
         # copies are the exact-shingle path's job, via containment)
-        .filter(F.size("ca") == F.size("cb"))
-        .withColumn("__n", n)
-        .filter(F.col("__n") > 0)
-        .withColumn("__mand", F.zip_with(
-            F.slice("ma", 1, F.col("__n")), F.slice("mb", 1, F.col("__n")),
-            lambda x, y: x.bitwiseAND(y)))
-        .withColumn("__xor", F.zip_with(
-            F.slice("ca", 1, F.col("__n")), F.slice("cb", 1, F.col("__n")),
-            lambda x, y: x.bitwiseXOR(y)))
-        .withColumn("__den", F.aggregate(
-            "__mand", F.lit(0), lambda acc, m: acc + bc32(m)))
-        .withColumn("__num", F.aggregate(
-            F.zip_with("__xor", "__mand", lambda x, m: x.bitwiseAND(m)),
-            F.lit(0), lambda acc, v: acc + bc32(v)))
-        .withColumn("__raw", F.aggregate(
-            "__xor", F.lit(0), lambda acc, v: acc + bc32(v)))
-        .withColumn("__pagree", F.aggregate(
-            F.zip_with(F.slice("pa", 1, F.col("__n")), F.slice("pb", 1, F.col("__n")),
-                       lambda x, y: F.when(F.abs(x - y) <= 1, 1).otherwise(0)),
-            F.lit(0), lambda acc, v: acc + v))
+        .where("size(ca) = size(cb) AND size(ca) > 0")
+        .selectExpr(
+            "id_a", "id_b", "size(ca) AS n",
+            "zip_with(slice(ma, 1, size(ca)), slice(mb, 1, size(ca)), (x, y) -> x & y) AS mand",
+            "zip_with(ca, cb, (x, y) -> x ^ y) AS xor",
+            "zip_with(slice(pa, 1, size(ca)), slice(pb, 1, size(ca)),"
+            " (x, y) -> IF(abs(x - y) <= 1, 1, 0)) AS pag",
+        )
     )
     return (
-        joined.filter(F.col("__den") >= min_mask_bits)
-        .withColumn("wber", F.round(F.col("__num") / F.col("__den"), 6))
-        .withColumn("raw_ber", F.round(F.col("__raw") / (32 * F.col("__n")), 6))
-        .withColumn("peak_agree", F.round(F.col("__pagree") / F.col("__n"), 6))
-        .filter((F.col("wber") <= wber_max)
-                & (F.col("raw_ber") <= raw_ber_max)
-                & (F.col("peak_agree") >= peak_agree_min))
-        .select("id_a", "id_b", "wber", "raw_ber", "peak_agree",
-                F.col("__n").alias("n_overlap"))
+        words.selectExpr(
+            "id_a", "id_b", "n", bits.format("mand") + " AS den",
+            bits.format("zip_with(xor, mand, (x, m) -> x & m)") + " AS num",
+            bits.format("xor") + " AS raw", "aggregate(pag, 0, (s, v) -> s + v) AS pag",
+        )
+        .where(f"den >= {int(min_mask_bits)}")
+        .selectExpr("id_a", "id_b", "round(num / den, 6) AS wber",
+                    "round(raw / (32 * n), 6) AS raw_ber",
+                    "round(pag / n, 6) AS peak_agree", "n AS n_overlap")
+        .where(f"wber <= {_dbl_sql(wber_max)} AND raw_ber <= {_dbl_sql(raw_ber_max)}"
+               f" AND peak_agree >= {_dbl_sql(peak_agree_min)}")
     )
 
 
@@ -500,53 +461,32 @@ def speed_blocked_neardup(
 
     Scale shape: same transcript-equality blocking as
     :func:`transcript_blocked_neardup` (bounded candidates), then a
-    sample-count-ratio gate and one JVM transform/aggregate over the
-    candidate pairs' peak arrays. Returns
+    sample-count-ratio gate and one parsed SQL transform/aggregate over
+    the candidate pairs' peak arrays. Returns
     (id_a, id_b, speed_ratio, peak_agree, n_frames_a, n_frames_b).
     """
     if fp is None:
         fp = audio_fingerprint_codes(df, key_col, bytes_col, codec_col)
     if pairs is None:
         pairs = transcript_candidate_pairs(df, key_col, transcript_col, block_cap)
-    a = fp.select(F.col(key_col).alias("id_a"), F.col("peaks").alias("pa"),
-                  F.col("n_fp").alias("__la"))
-    b = fp.select(F.col(key_col).alias("id_b"), F.col("peaks").alias("pb"),
-                  F.col("n_fp").alias("__lb"))
-
-    def pred_ok(j):
-        idx = F.least(
-            F.greatest(F.floor(F.col("__f") * j + F.lit(0.5)), F.lit(0)),
-            (F.col("__na") - 1).cast("long"),
-        )
-        pred = F.col("__f") * F.element_at("pa", idx.cast("int") + 1)
-        return F.when(
-            F.abs(pred - F.element_at("pb", j.cast("int") + 1)) <= peak_tol, 1
-        ).otherwise(0)
-
-    paired = pairs.join(a, on="id_a")
-    if pairs.isLocal():  # bounded driver-generated pairs: see transcript path
-        paired = F.broadcast(paired)
+    # floor(f*j + .5) indexes a's track, clamped to [0, na - 1]
+    pred = ("f * element_at(pa, CAST(least(greatest(floor(f * j + 0.5D), 0),"
+            " CAST(na - 1 AS BIGINT)) AS INT) + 1)")
+    agree = (f"aggregate(transform(sequence(0, nb - 1), j -> IF(abs({pred}"
+             f" - element_at(pb, j + 1)) <= {_dbl_sql(peak_tol)}, 1, 0)), 0, (s, v) -> s + v)")
+    m = int(min_frames)
+    lo, hi = _dbl_sql(dead_zone[0]), _dbl_sql(dead_zone[1])
     return (
-        paired.join(b, on="id_b")
-        .withColumn("__na", F.size("pa"))
-        .withColumn("__nb", F.size("pb"))
-        .filter((F.col("__na") >= min_frames) & (F.col("__nb") >= min_frames))
-        .filter(F.col("__lb") > 0)
-        .withColumn("__f", F.col("__la").cast("double") / F.col("__lb").cast("double"))
-        .filter((F.col("__f") >= min_ratio) & (F.col("__f") <= max_ratio))
-        .filter((F.col("__f") <= dead_zone[0]) | (F.col("__f") >= dead_zone[1]))
-        .withColumn("__agree", F.aggregate(
-            F.transform(F.sequence(F.lit(0), F.col("__nb") - 1), pred_ok),
-            F.lit(0), lambda acc, v: acc + v))
-        .withColumn("peak_agree", F.round(F.col("__agree") / F.col("__nb"), 6))
-        .filter(F.col("peak_agree") >= agree_min)
-        .select(
-            "id_a", "id_b",
-            F.round("__f", 6).alias("speed_ratio"),
-            "peak_agree",
-            F.col("__na").alias("n_frames_a"),
-            F.col("__nb").alias("n_frames_b"),
-        )
+        _pair_join(pairs, fp, key_col, p="peaks", l="n_fp")
+        .where(f"size(pa) >= {m} AND size(pb) >= {m} AND lb > 0")
+        .selectExpr("id_a", "id_b", "pa", "pb", "size(pa) AS na", "size(pb) AS nb",
+                    "CAST(la AS DOUBLE) / CAST(lb AS DOUBLE) AS f")
+        .where(f"f >= {_dbl_sql(min_ratio)} AND f <= {_dbl_sql(max_ratio)}"
+               f" AND (f <= {lo} OR f >= {hi})")
+        .selectExpr("id_a", "id_b", "round(f, 6) AS speed_ratio",
+                    f"round({agree} / nb, 6) AS peak_agree",
+                    "na AS n_frames_a", "nb AS n_frames_b")
+        .where(f"peak_agree >= {_dbl_sql(agree_min)}")
     )
 
 

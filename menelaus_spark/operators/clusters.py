@@ -35,7 +35,8 @@ the floor for an inherently sequential iteration, not 2 jobs
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql import types as T
+
+from menelaus_spark.operators.dedup import _local_frame
 
 
 def _signature(edges: DataFrame) -> tuple[int, int]:
@@ -67,9 +68,10 @@ def _driver_components(edges: DataFrame) -> DataFrame:
     node that appears in an edge maps to the MINIMUM id of its
     component (Python ``min`` and Spark ``min``/``least`` agree on
     both long and lexicographic string ids). One collect job instead
-    of one job per star half-round; the caller gates entry on the
-    exact edge count, so this never sees more than ``driver_cap``
-    edges."""
+    of one job per star half-round, and the result is an Arrow-built
+    LocalRelation (dedup._local_frame), so the caller's next action
+    over it runs no Python worker; the caller gates entry on the exact
+    edge count, so this never sees more than ``driver_cap`` edges."""
     parent: dict = {}
 
     def find(x):
@@ -91,12 +93,9 @@ def _driver_components(edges: DataFrame) -> DataFrame:
             # final root of every node is its component minimum
             lo, hi = (ru, rv) if ru < rv else (rv, ru)
             parent[hi] = lo
-    rows = [(x, find(x)) for x in parent]
-    id_type = edges.schema[0].dataType
-    out_schema = T.StructType([
-        T.StructField("id", id_type), T.StructField("cluster_id", id_type)
-    ])
-    return edges.sparkSession.createDataFrame(rows, schema=out_schema)
+    id_type = edges.schema[0].dataType.simpleString()
+    return _local_frame(edges.sparkSession, [(x, find(x)) for x in parent],
+                        ["id", "cluster_id"], f"id {id_type}, cluster_id {id_type}")
 
 
 def connected_components(

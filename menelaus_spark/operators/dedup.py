@@ -267,17 +267,18 @@ def ngram_jaccard_pairs(
         ).withColumn("__sz", F.size("__hs"))
     )
 
-    # per-block row counts gate the two execution paths. ONE tiny
-    # collect (a row per block) decides the split driver-side, so the
-    # common all-under-cap case plans ONLY the kernel path (a blind
-    # two-path union would carry the whole AllPairs subtree's codegen
-    # for an empty input); the collect doubles as the materializing
-    # action for the pinned hdoc frame, which every path needs anyway.
-    size_rows = hdoc.groupBy("__blk").agg(
-        F.count(F.lit(1)).alias("__bn")).collect()
-    over = [r["__blk"] for r in size_rows if int(r["__bn"]) > kernel_block_rows]
-    under = [r["__blk"] for r in size_rows
-             if int(r["__bn"]) <= kernel_block_rows]
+    # per-block row counts gate the two execution paths: a small
+    # (__blk, __over_cap) frame, broadcast-joined to split the blocks
+    # (no block-id literal lists in the plan, whatever the block
+    # count). ONE one-row aggregate over it decides driver-side which
+    # paths are non-empty, so the common all-under-cap case plans ONLY
+    # the kernel path (a blind two-path union would carry the whole
+    # AllPairs subtree's codegen for an empty input); it doubles as the
+    # materializing action for the pinned hdoc frame, which every path
+    # needs anyway.
+    gate = hdoc.groupBy("__blk").agg(
+        (F.count(F.lit(1)) > kernel_block_rows).alias("__over_cap"))
+    any_over, all_over = gate.agg(F.max("__over_cap"), F.min("__over_cap")).collect()[0]
 
     jacc = F.round(
         F.when(F.col("__union") == 0, F.lit(0.0))
@@ -294,13 +295,11 @@ def ngram_jaccard_pairs(
             .select("id_a", "id_b", "jaccard")
         )
 
-    if not over:
+    if not any_over:
         return kernel_pairs(hdoc)
-    hdoc_big = hdoc.filter(F.col("__blk").isin(over))
-    small_pairs = (
-        kernel_pairs(hdoc.filter(~F.col("__blk").isin(over)))
-        if under else None
-    )
+    split = hdoc.join(F.broadcast(gate), on="__blk")
+    hdoc_big = split.filter("__over_cap")
+    small_pairs = None if all_over else kernel_pairs(split.filter("NOT __over_cap"))
 
     tok = hdoc_big.select(F.col(id_col), "__blk", "__sz", F.explode("__hs").alias("__h"))
     dfreq = tok.groupBy("__h").agg(F.count(F.lit(1)).alias("__df"))
@@ -478,21 +477,14 @@ def minhash_sig_py(shingles, k: int = 32) -> list[int]:
 
 def lsh_candidate_pairs(sig_df: DataFrame, id_col: str, bands: int = 8, rows: int = 4) -> DataFrame:
     """Band the signatures; same (band, band-hash) bucket -> candidate
-    pair. Returns distinct (id_a, id_b)."""
-    banded = sig_df.filter(F.size("sig") > 0).select(
-        F.col(id_col),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda bnd: F.struct(
-                    bnd.alias("band"),
-                    F.md5(F.concat_ws(",", F.transform(
-                        F.slice(F.col("sig"), bnd * rows + 1, rows), lambda x: x.cast("string")
-                    ))).alias("bhash"),
-                ),
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bhash")
+    pair. The banding is one parsed SQL generator: band b's hash is the
+    md5 of its comma-joined signature slice. Returns distinct
+    (id_a, id_b)."""
+    r = int(rows)
+    band = (f"inline(transform(sequence(0, {int(bands) - 1}), b -> named_struct('band', b,"
+            f" 'bhash', md5(concat_ws(',', transform(slice(sig, b * {r} + 1, {r}),"
+            " x -> CAST(x AS STRING)))))))")
+    banded = sig_df.where("size(sig) > 0").select(F.col(id_col), F.expr(band))
     a = banded.select(F.col("band"), F.col("bhash"), F.col(id_col).alias("id_a"))
     b = banded.select(F.col("band"), F.col("bhash"), F.col(id_col).alias("id_b"))
     return (
@@ -511,28 +503,17 @@ def lsh_candidate_pairs_driver(recs, bands: int, rows: int) -> set:
     rule, same distinct set. Used by the bounded-driver near-dup fast
     paths; bucket pair volume is the same as the distributed join's."""
     import hashlib
-    from collections import defaultdict
 
-    buckets: dict[tuple, list] = defaultdict(list)
-    for rid, sig in recs:
-        if sig is None or len(sig) == 0:  # F.size("sig") > 0
-            continue
-        for b in range(bands):
-            seg = sig[b * rows:(b + 1) * rows]
-            bh = hashlib.md5(
-                ",".join(str(int(x)) for x in seg).encode()).hexdigest()
-            buckets[(b, bh)].append(rid)
-    pairs: set = set()
-    for g in buckets.values():
-        if len(g) < 2:
-            continue
-        for x in range(len(g)):
-            for y in range(x + 1, len(g)):
-                a, b2 = g[x], g[y]
-                if a == b2:
-                    continue
-                pairs.add((a, b2) if a < b2 else (b2, a))
-    return pairs
+    def band_rows():
+        for rid, sig in recs:
+            if sig is None or len(sig) == 0:  # size(sig) > 0
+                continue
+            for b in range(bands):
+                seg = sig[b * rows:(b + 1) * rows]
+                yield rid, (b, hashlib.md5(
+                    ",".join(str(int(x)) for x in seg).encode()).hexdigest())
+
+    return capped_block_pairs_driver(band_rows(), None)
 
 
 def capped_block_pairs_driver(rows_, cap: int | None) -> set:

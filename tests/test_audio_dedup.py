@@ -513,3 +513,77 @@ def test_minhash_arrow_kernel_matches_jvm_kernel(spark):
             assert arrow[3] == []  # empty-shingle contract
     finally:
         sh.unpersist()
+
+
+def test_verify_thresholds_and_key_col_forms(spark):
+    # the verify stages write their thresholds into parsed SQL: int and
+    # numpy thresholds and a renamed key column must return the same
+    # rows as the float, default-key call
+    from menelaus_spark.operators.audio_dedup import (
+        audio_fingerprint_codes, speed_blocked_neardup)
+
+    df = tables.audio_table(spark, n_rows=160, n_parts=2, drift={},
+                            neardup_frac=0.125, null_frac=0.0,
+                            neardup_modes=("mixed",))
+    ren = df.withColumnRenamed("clip_id", "cid")
+    fp = audio_fingerprint_codes(df).persist()
+
+    def rows(d):
+        return sorted(map(tuple, d.collect()))
+
+    try:
+        tb = rows(transcript_blocked_neardup(df, fp=fp))
+        assert tb == rows(transcript_blocked_neardup(
+            df, fp=fp, wber_max=np.float64(0.10), raw_ber_max=np.float64(0.35),
+            peak_agree_min=np.float64(0.9), min_mask_bits=np.int64(16)))
+        assert tb == rows(transcript_blocked_neardup(ren, key_col="cid"))
+        loose = rows(transcript_blocked_neardup(
+            df, fp=fp, wber_max=1.0, raw_ber_max=1.0, peak_agree_min=0.0))
+        assert loose == rows(transcript_blocked_neardup(
+            df, fp=fp, wber_max=1, raw_ber_max=1, peak_agree_min=0))
+        assert set(tb) < set(loose)
+
+        sp = rows(speed_blocked_neardup(df, fp=fp))
+        assert sp == rows(speed_blocked_neardup(
+            df, fp=fp, min_ratio=np.float64(0.77), max_ratio=np.float64(1.30),
+            dead_zone=(np.float64(0.96), np.float64(1.04)),
+            peak_tol=np.float64(0.35), agree_min=np.float64(0.8),
+            min_frames=np.int64(8)))
+        assert sp == rows(speed_blocked_neardup(ren, key_col="cid"))
+        loose = rows(speed_blocked_neardup(
+            df, fp=fp, min_ratio=0.0, max_ratio=2.0, dead_zone=(1.0, 1.0),
+            peak_tol=1.0, agree_min=0.0))
+        assert loose == rows(speed_blocked_neardup(
+            df, fp=fp, min_ratio=0, max_ratio=2, dead_zone=(1, 1),
+            peak_tol=1, agree_min=0))
+        assert set(sp) < set(loose)
+        assert tb and sp  # the fixture injects both copy classes
+    finally:
+        fp.unpersist()
+
+
+def test_neardup_plans_are_parsed_sql():
+    # near-dup plans cross to the JVM as parsed SQL text: no withColumn
+    # chain, and no Python function handed to a higher-order column
+    # function (pyspark's F.transform/zip_with/aggregate always take
+    # one), in operators/audio_dedup.py or dedup.lsh_candidate_pairs
+    import ast
+    import inspect
+    import textwrap
+
+    from menelaus_spark.operators import audio_dedup, dedup
+
+    higher_order = {"aggregate", "exists", "filter", "forall", "map_filter",
+                    "map_zip_with", "reduce", "transform", "transform_keys",
+                    "transform_values", "zip_with"}
+    found = []
+    for obj in (audio_dedup, dedup.lsh_candidate_pairs):
+        tree = ast.parse(textwrap.dedent(inspect.getsource(obj)))
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            f = node.func
+            if f.attr == "withColumn" or (
+                    f.attr in higher_order and getattr(f.value, "id", None) == "F"):
+                found.append((obj.__name__, f.attr, node.lineno))
+    assert not found

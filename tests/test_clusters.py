@@ -133,3 +133,19 @@ def test_driver_fast_path_matches_distributed(spark):
         fast = sorted(map(tuple, connected_components(df).collect()))
         slow = sorted(map(tuple, connected_components(df, driver_cap=0).collect()))
         assert fast == slow
+
+
+def test_driver_components_frame_is_local(spark):
+    # under the driver cap the (id, cluster_id) frame is an Arrow-built
+    # LocalRelation, so the next action over it (cluster_members) runs
+    # no Python worker
+    cases = [
+        ([("a", "b"), ("b", "c"), ("x", "y")], "string"),
+        ([(5, 4), (4, 3), (10, 11)], "bigint"),
+    ]
+    for pairs, id_type in cases:
+        df = spark.createDataFrame(pairs, f"id_a {id_type}, id_b {id_type}")
+        cc = connected_components(df)
+        assert cc.isLocal()
+        assert cc.dtypes == [("id", id_type), ("cluster_id", id_type)]
+        assert sorted(map(tuple, cc.collect())) == sorted(_union_find(pairs).items())

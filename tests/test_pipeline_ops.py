@@ -549,6 +549,16 @@ def test_ngram_jaccard_hybrid_paths_bit_equal(spark):
         docs, "doc_id", "text", n=2, threshold=0.3, block_col="blk",
         kernel_block_rows=0).collect()))
     assert kernel == allpairs and len(kernel) >= 2
+    # a cap between the block sizes splits the blocks (x over, y under)
+    # through the gate join: the union of both paths, same result
+    mixed = docs.filter("doc_id <> 8")
+    split = sorted(map(tuple, dedup.ngram_jaccard_pairs(
+        mixed, "doc_id", "text", n=2, threshold=0.3, block_col="blk",
+        kernel_block_rows=3).collect()))
+    whole = sorted(map(tuple, dedup.ngram_jaccard_pairs(
+        mixed, "doc_id", "text", n=2, threshold=0.3, block_col="blk",
+        kernel_block_rows=10_000).collect()))
+    assert split == whole and {r[:2] for r in split} >= {(1, 2), (5, 6)}
     # string ids too (id_a < id_b ordering is by VALUE in both paths)
     sdocs = docs.select(F.concat(F.lit("d"), F.col("doc_id")).alias("doc_id"),
                         "text", "blk")

@@ -3,10 +3,14 @@ entry on Spark and its oracle_sql() in DuckDB over the same sf dir;
 compare row count, sorted column names, and order-insensitive values.
 
 Usage: python tools/check_oracles.py [sf_dir] [only_query ...]
+
+Each ``only_query`` is an exact query name or an fnmatch pattern, e.g.
+``'*neardup*' '*dedup*'`` runs that family.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import math
 import os
 import sys
@@ -44,7 +48,7 @@ def main():
     sqls = entrymod.oracle_sql()
     failures = 0
     for name, fn in qs.items():
-        if only and name not in only:
+        if only and not any(fnmatch.fnmatchcase(name, p) for p in only):
             continue
         try:
             sdf = fn(spark, sf_dir)
